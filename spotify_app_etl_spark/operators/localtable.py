@@ -12,20 +12,25 @@ measured in this environment (128-row codebook table, warm session):
   codebook table, ~1.7 s for a 600-literal merge table. Fine for a
   handful of literals (``similarity._meta_row``), quadratic-feeling
   beyond ~100.
-* ``spark.createDataFrame(pandas_df, schema)`` with Arrow enabled
-  (session default here): ONE py4j call shipping one Arrow batch;
-  ~0.03 s for the same tables, and the batch is held JVM-side, so
-  actions never touch a Python worker either. Values move as binary
-  doubles/ints — no literal formatting, no precision round trip.
+* ``spark.createDataFrame(pyarrow_table, struct)``: ONE py4j call
+  shipping one Arrow batch; ~0.03 s for the same tables, and the batch
+  is held JVM-side as a ``LocalRelation``, so actions never touch a
+  Python worker either. Values move as binary doubles/ints — no literal
+  formatting, no precision round trip. A ``pyarrow.Table`` takes this
+  path whether ``spark.sql.execution.arrow.pyspark.enabled`` is on or
+  off (a pandas frame would fall back to the pickled path when it is
+  off).
 
-This module standardizes the third path. Sites that build per-call
-driver tables (PQ codebooks, BPE merge lists, range-rank offsets,
-SemDeDup block counts) route through :func:`local_df`; single-row
-metas keep the literal pattern (cheapest at that size).
+This module standardizes the third path. Its user today is the ETL
+ingest (``etl._json_df``: the raw page items of the four driver-side
+endpoints). The per-site literal / list branches for PQ codebooks, BPE
+merge lists, range-rank offsets and SemDeDup block counts are the
+intended next users; single-row metas keep the literal pattern
+(cheapest at that size).
 
-Scale note: these tables are O(partitions) / O(vocab_cap) / O(m*ksub)
-by construction — bounded by config, never by data size. Anything
-data-sized must go through a distributed plan instead.
+Scale note: these tables are bounded by config or by one API page
+chain, never by a distributed dataset's size. Anything data-sized must
+go through a distributed plan instead.
 """
 
 from __future__ import annotations
@@ -33,6 +38,7 @@ from __future__ import annotations
 from collections.abc import Mapping, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 def local_df(
@@ -43,14 +49,25 @@ def local_df(
 
     ``schema`` is a DDL string (``"a int, b array<double>"``);
     ``columns`` maps each schema field name to its values, all the
-    same length. Values are shipped as binary Arrow data — exact for
-    doubles, no SQL-literal quoting concerns for strings. Empty
-    columns produce a valid zero-row frame with the right schema.
+    same length. Columns bind to fields BY NAME, so the mapping's key
+    order is irrelevant; a missing or extra key raises ``ValueError``.
+    Values are shipped as binary Arrow data — exact for doubles, no
+    SQL-literal quoting concerns for strings. Empty columns produce a
+    valid zero-row frame with the declared schema.
     """
-    import pandas as pd
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
 
-    data = {name: pd.Series(list(vals), dtype=object) for name, vals in columns.items()}
-    if not data:
-        raise ValueError("local_df: at least one column required")
-    pdf = pd.DataFrame(data)
-    return spark.createDataFrame(pdf, schema)
+    struct = StructType.fromDDL(schema)
+    names = struct.fieldNames()
+    missing = [n for n in names if n not in columns]
+    extra = [k for k in columns if k not in names]
+    if missing or extra:
+        raise ValueError(
+            f"local_df: columns do not match schema {schema!r}: "
+            f"missing {missing}, extra {extra}"
+        )
+    table = pa.Table.from_pydict(
+        {name: columns[name] for name in names}, schema=to_arrow_schema(struct)
+    )
+    return spark.createDataFrame(table, struct)
